@@ -67,23 +67,18 @@ object BuildBench {
     // last wave straggling on the largest partition
     val cfg = Build.Config(numPartitions = cores * 4, nSalts = 8,
       saltDfThreshold = nDocs / 2,
-      stagingMode = sys.env.getOrElse("GRAFT_STAGING_MODE", "parquet"),
-      stagingCodec = sys.env.getOrElse("GRAFT_STAGING_CODEC", "uncompressed"),
       // the at-scale config: heavy-term detection over a 2% sample
       heavySampleFraction = sys.env.getOrElse("GRAFT_HEAVY_SAMPLE", "0.02").toDouble,
       tokenizer = Tokenizer.default,
-      // A/B hook for the posting-shuffle experiment (SURVEY §4 item 4)
-      shuffleMode = sys.env.getOrElse("GRAFT_SHUFFLE_MODE", "rows"),
       // A/B hook for costing the spell-artifact phase
       spellIndex = sys.env.getOrElse("GRAFT_SPELL_ARTIFACT", "on") != "off")
     // JIT/classload warmup on a small slice (untimed) so the timed run
     // measures steady-state throughput, not cold-JVM compilation
     val warmDir = java.nio.file.Files
       .createTempDirectory("graft-bench-warm").toString
-    // shuffle-payload meter: the evidence behind the rows-vs-runs
-    // shuffle-mode decision is bytes on the wire, not just wall-clock
-    // (on one box the shuffle is RAM-local and free; on a cluster it
-    // is the network bottleneck the runs mode exists to shrink)
+    // shuffle-payload meter: bytes on the wire, not just wall-clock (on
+    // one box the shuffle is RAM-local and free; on a cluster it is the
+    // network bottleneck)
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(

@@ -14,7 +14,9 @@ import graft.query.BM25
   *   → tokenizer flatMap (narrow; the one generator) emitting posting
   *     rows PLUS one null-term sentinel row per doc carrying the doc's
   *     stats (dl, maxTf, uniq, ts) — all known inside the tokenize call
-  *   → staging postings parquet (ONE tokenize pass feeds all consumers)
+  *   → staging postings parquet (ONE tokenize pass feeds all consumers;
+  *     the sha256 ingest gate reads its accumulator the moment the
+  *     staging write lands, before any index file exists)
   *   → doc_stats = narrow filter over the sentinel rows (NO shuffle —
   *     the groupBy(docId) re-shuffle of the full posting set is gone)
   *   → heavy-term detection over a seeded sample     [tiny shuffle]
@@ -27,9 +29,14 @@ import graft.query.BM25
   *   → term_stats = vocab-sized agg over the writer's dict entries
   *     (df/cf fall out of the (term,salt) runs — the groupBy(term)
   *     full-posting shuffle is gone too)
+  *   → corpus_stats ([[CorpusStats]], stamped with `format_version`)
   *
   * Net: the posting set crosses the network ONCE. At 10^12-file scale
   * the two eliminated shuffles are each as large as the index itself.
+  * There is one staging mode (parquet) and one shuffle (raw posting
+  * rows): a map-side run-packing shuffle shipped 2.9x fewer bytes but
+  * built slower on one box and was deleted (BASELINE.md, round-3
+  * shuffle-mode experiment).
   *
   * Skew (north rule): terms with df ≥ saltDfThreshold (code stopwords,
   * license boilerplate) are salted by docId RANGE, so per-salt block runs
@@ -46,29 +53,19 @@ object Build {
     * harmless (salted≡unsalted is proven in IndexSpec) while exact df
     * would cost a full aggregation pass. 1.0 = exact (the default;
     * small-corpus tests pin specific salting outcomes). */
-  /** `stagingMode`:
-    *  - "parquet": materialize the tokenize pass as a staging parquet
-    *    dir (inspectable, survives the JVM; the tests read it),
-    *  - "cache": persist the postings MEMORY_AND_DISK_SER in the block
-    *    manager — skips the parquet encode/decode round-trip; spills to
-    *    executor disk at scale like any shuffle, recomputes from lineage
-    *    on executor loss,
-    *  - "none": no materialization; each consumer re-tokenizes. */
   final case class Config(
       numPartitions: Int = 32,
       nSalts: Int = 8,
       saltDfThreshold: Long = 100000,
-      stagingMode: String = "parquet",
-      stagingCodec: String = "uncompressed",
       verifySha: Boolean = true,
       heavySampleFraction: Double = 1.0,
       tokenizer: Tokenizer.Config = Tokenizer.default,
-      spellIndex: Boolean = true,
-      shuffleMode: String = "rows") {
-    require(Set("parquet", "cache", "none")(stagingMode),
-      s"unknown stagingMode $stagingMode")
-    require(Set("rows", "runs")(shuffleMode),
-      s"unknown shuffleMode $shuffleMode")
+      spellIndex: Boolean = true) {
+    /** Staging parquet codec. Uncompressed: snappy's JNI critical
+      * sections (GCLocker) stall allocation-heavy tokenizer threads at
+      * high parallelism, and staging is transient, so space is traded
+      * for wall-clock. */
+    val stagingCodec: String = "uncompressed"
   }
 
   final case class Result(indexDir: String, nDocs: Long, avgdl: Double,
@@ -204,49 +201,21 @@ object Build {
       if (cfg.verifySha) Some(spark.sparkContext.longAccumulator("shaViolations"))
       else None
     val stagingDir = s"$indexDir/staging_postings"
-    val postings: DataFrame = phase("tokenize+verify+stage") {
-      cfg.stagingMode match {
-        case "parquet" =>
-          // default uncompressed staging: snappy's JNI critical sections
-          // (GCLocker) stall allocation-heavy tokenizer threads at high
-          // parallelism; staging is transient, trading space for
-          // wall-clock. lz4 (pure-JVM) is the knob when staging IO volume
-          // itself becomes the contention at high core counts.
-          postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc)
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", cfg.stagingCodec)
-            .parquet(stagingDir)
-          spark.read.parquet(stagingDir)
-        case "cache" =>
-          val df = postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc).toDF()
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          df // materialized by the first consumer job
-        case _ =>
-          postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc).toDF()
-      }
+    phase("tokenize+verify+stage") {
+      postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc)
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", cfg.stagingCodec)
+        .parquet(stagingDir)
     }
-    // EARLY sha gate: with parquet staging the accumulator is final the
-    // moment the staging write lands, so a violating corpus aborts HERE
-    // — before any stats/dict/segment file exists in indexDir — rather
-    // than leaving a complete-looking index behind and then throwing
-    // (review finding: a reader that only opens the index files, never
-    // the markers, would serve invariant-violating data)
-    if (cfg.stagingMode == "parquet") {
-      val early = shaAcc.map(_.value.toLong).getOrElse(0L)
-      require(early == 0, s"$early rows fail the sha256 ingest invariant")
-    }
-    try {
-      val res = runFromPostings(spark, postings, indexDir, cfg,
-        shaAcc.map(_.value.toLong).getOrElse(0L))
-      // with cache/none staging the accumulator is only final once the
-      // consumer jobs ran; an overcount from task retries can only push
-      // a true violation count further from zero, never mask one
-      val shaViol = shaAcc.map(_.value.toLong).getOrElse(0L)
-      require(shaViol == 0, s"$shaViol rows fail the sha256 ingest invariant")
-      res.copy(shaViolations = shaViol)
-    } finally {
-      if (cfg.stagingMode == "cache") postings.unpersist(blocking = false)
-    }
+    // sha gate: the accumulator is final the moment the staging write
+    // lands, so a violating corpus aborts HERE — before any
+    // stats/dict/segment file exists in indexDir — rather than leaving a
+    // complete-looking index behind and then throwing (a reader that
+    // only opens the index files, never the markers, would serve
+    // invariant-violating data)
+    val shaViol = shaAcc.map(_.value.toLong).getOrElse(0L)
+    require(shaViol == 0, s"$shaViol rows fail the sha256 ingest invariant")
+    runFromPostings(spark, spark.read.parquet(stagingDir), indexDir, cfg)
   }
 
   /** The post-tokenize build stages over an existing postings frame —
@@ -254,10 +223,9 @@ object Build {
     * column — so alternative tokenize profiles (e.g. the tweet
     * capital/entity fold, analysis/TweetIndex) reuse the stats + salted
     * shuffle + segment machinery unchanged. Frames WITHOUT sentinel
-    * rows fall back to the groupBy(docId) doc-stats aggregation. */
+    * rows (TweetIndex's) take the groupBy(docId) doc-stats aggregation. */
   def runFromPostings(spark: SparkSession, postingsAll: DataFrame,
-                      indexDir: String, cfg: Config = Config(),
-                      shaViol: Long = 0L): Result = {
+                      indexDir: String, cfg: Config = Config()): Result = {
     import spark.implicits._
 
     val hasSentinels = postingsAll.columns.contains("uniq")
@@ -270,7 +238,7 @@ object Build {
     // the tokenize and segment stages; neither shuffles the posting set).
     // Corpus-level stats ride the doc-stats write via observe() — no
     // extra job. ---------------------------------------------------------
-    val obs = new org.apache.spark.sql.Observation("corpus_stats")
+    val obs = new org.apache.spark.sql.Observation("doc_stats")
     val docStatsF = scala.concurrent.Future {
       phase("doc-stats") {
         val docStats =
@@ -317,8 +285,7 @@ object Build {
 
     val nSalts = cfg.nSalts
     val lineage = s"docs=$n|avgdl=$av|salts=$nSalts|P=${cfg.numPartitions}|" +
-      s"stem=${cfg.tokenizer.stem}|v3" +
-      (if (cfg.shuffleMode == "runs") "|runs" else "")
+      s"stem=${cfg.tokenizer.stem}|v3"
 
     // ---- the ONE full-posting shuffle: salted term repartition →
     // sorted runs → segment writer. The salt is a Catalyst expression
@@ -339,71 +306,31 @@ object Build {
     val salted = postings.select($"term".as("_1"), saltExpr.as("_2"),
       $"docId".as("_3"), $"tf".as("_4"), $"dl".as("_5"))
 
-    if (cfg.shuffleMode == "runs") {
-      // ---- runs mode (SURVEY §4 item 4 experiment): the shuffle ships
-      // per-(term,salt) delta-gap varbyte-packed runs built by map-side
-      // partial aggregation (PostingRunAgg) instead of raw posting rows
-      // — the term string crosses the network once per map partition,
-      // postings at ~3-6 B each. The aggregation exchange is pinned to
-      // numPartitions with AQE coalescing off so marker pids stay
-      // stable for resume; both modes then run the SAME segment-writer
-      // core, emitting byte-identical files (IndexSpec gate).
-      import org.apache.spark.sql.graftshim.SqlShim
-      val conf = spark.conf
-      val oldP = conf.get("spark.sql.shuffle.partitions")
-      val oldC = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      conf.set("spark.sql.shuffle.partitions", cfg.numPartitions.toString)
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      try {
-        val runCol = SqlShim.column(PostingRunAgg(
-          SqlShim.expression($"_3"), SqlShim.expression($"_4"),
-          SqlShim.expression($"_5")).toAggregateExpression())
-        val runs = salted.groupBy($"_1", $"_2").agg(runCol.as("run"))
-          .sortWithinPartitions($"_1", $"_2")
-        val entriesRdd = runs.queryExecution.toRdd.mapPartitions { rows =>
-          val pid = TaskContext.getPartitionId()
-          val grouped = rows.map { r =>
-            (r.getUTF8String(0).toString, r.getInt(1),
-              RunBuf.postings(r.getBinary(2)))
-          }
-          SegmentStore.writePartitionRuns(segDir, pid, lineage, grouped,
-            (tf, dl) => BM25.normPart(tf, dl, av)).entries.iterator
-        }
-        phase("segments+dict") {
-          spark.createDataset(entriesRdd).toDF()
-            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dict")
-        }
-      } finally {
-        conf.set("spark.sql.shuffle.partitions", oldP)
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldC)
+    val sorted = salted
+      .repartition(cfg.numPartitions, $"_1", $"_2")
+      .sortWithinPartitions($"_1", $"_2", $"_3")
+    // consume the sorted shuffle output as InternalRows: the term string
+    // is decoded ONCE per (term, salt) run, not once per posting — the
+    // typed-encoder path allocated a String + tuple per row, and at
+    // millions of postings per partition that deserialization was a
+    // measurable slice of the reduce stage (memory bandwidth is the
+    // single-box scaling ceiling, BASELINE.md)
+    val entriesRdd = sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val pid = TaskContext.getPartitionId()
+      var curU: org.apache.spark.unsafe.types.UTF8String = null
+      var curS: String = null
+      val mapped = rows.map { r =>
+        val t = r.getUTF8String(0)
+        if (curU == null || !curU.equals(t)) { curU = t.copy(); curS = curU.toString }
+        (curS, r.getInt(1), Codec.Posting(r.getLong(2), r.getInt(3), r.getInt(4)))
       }
-    } else {
-      val sorted = salted
-        .repartition(cfg.numPartitions, $"_1", $"_2")
-        .sortWithinPartitions($"_1", $"_2", $"_3")
-      // consume the sorted shuffle output as InternalRows: the term string
-      // is decoded ONCE per (term, salt) run, not once per posting — the
-      // typed-encoder path allocated a String + tuple per row, and at
-      // millions of postings per partition that deserialization was a
-      // measurable slice of the reduce stage (memory bandwidth is the
-      // single-box scaling ceiling, BASELINE.md)
-      val entriesRdd = sorted.queryExecution.toRdd.mapPartitions { rows =>
-        val pid = TaskContext.getPartitionId()
-        var curU: org.apache.spark.unsafe.types.UTF8String = null
-        var curS: String = null
-        val mapped = rows.map { r =>
-          val t = r.getUTF8String(0)
-          if (curU == null || !curU.equals(t)) { curU = t.copy(); curS = curU.toString }
-          (curS, r.getInt(1), Codec.Posting(r.getLong(2), r.getInt(3), r.getInt(4)))
-        }
-        val marker = SegmentStore.writePartition(segDir, pid, lineage,
-          mapped, (tf, dl) => BM25.normPart(tf, dl, av)) // maxU: idf-independent
-        marker.entries.iterator
-      }
-      phase("segments+dict") {
-        spark.createDataset(entriesRdd).toDF()
-          .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dict")
-      }
+      val marker = SegmentStore.writePartition(segDir, pid, lineage,
+        mapped, (tf, dl) => BM25.normPart(tf, dl, av)) // maxU: idf-independent
+      marker.entries.iterator
+    }
+    phase("segments+dict") {
+      spark.createDataset(entriesRdd).toDF()
+        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dict")
     }
 
     // ---- term stats from the writer's dict entries: df/cf summed over
@@ -428,7 +355,7 @@ object Build {
     // the engine's lazy path applies, moved to build time; an extreme
     // vocabulary skips the artifact and engines keep their bounded
     // fallback. Runs as a FUTURE overlapped with the remaining small
-    // phases (A9 counter, corpus_stats, marker reads) — the artifact
+    // phases (A9 counter, corpus stats, marker reads) — the artifact
     // build is driver-side CPU while those are Spark jobs.
     val spellF = scala.concurrent.Future {
       if (cfg.spellIndex) phase("spell-index") {
@@ -456,27 +383,8 @@ object Build {
         "^\\d+(\\.\\d+)?[KMB%$]?$|^\\d+/\\d+$|^\\d+ \\d+/\\d+$"))
       .agg(coalesce(sum($"cf"), lit(0L))).head().getLong(0)
 
-    // ts_min/ts_max let the engine skip loading the per-doc timestamp
-    // map entirely when the corpus has no recency signal (all equal).
-    // tok_cfg is the analysis-chain fingerprint Merge.disjoint compares
-    // across parts — merging a stemmed index into an unstemmed one
-    // unions incompatible term spaces and must fail loudly, not serve
-    // silently-wrong df/idf. The stopword set enters via an MD5 of the
-    // SORTED word list: collection hashCode (MurmurHash3) is only stable
-    // within one Scala release, so identical stopword sets built before
-    // and after a toolchain upgrade would refuse to merge — and a hash
-    // collision could let genuinely different sets merge (round-4
-    // advice); a content digest has neither failure mode.
-    val swDigest = java.security.MessageDigest.getInstance("MD5")
-      .digest(cfg.tokenizer.stopwords.toSeq.sorted
-        .mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val tokCfg = s"stem=${cfg.tokenizer.stem}|plain=${cfg.tokenizer.plain}" +
-      s"|sw=$swDigest"
-    Seq((n, av, tsMin, tsMax, nNumbers, tokCfg))
-      .toDF("n_docs", "avgdl", "ts_min", "ts_max", "n_number_tokens",
-        "tok_cfg")
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/corpus_stats")
+    CorpusStats(n, av, boundScale = 1.0, tsMin, tsMax, nNumbers,
+      CorpusStats.fingerprint(cfg.tokenizer)).write(spark, indexDir)
 
     // manifest markers already carry per-partition rows — no extra job
     val totalPostings = (0 until cfg.numPartitions)
@@ -488,7 +396,7 @@ object Build {
     scala.concurrent.Await.result(spellF,
       scala.concurrent.duration.Duration.Inf)
 
-    Result(indexDir, n, av, totalPostings, shaViol, lineage)
+    Result(indexDir, n, av, totalPostings, shaViolations = 0L, lineage)
   }
 
   /** OPT-IN positional sidecar build ([[PosStore]] scaladoc): a second
@@ -519,8 +427,8 @@ object Build {
         }
       }.toDF("term", "docId", "posBytes")
 
-    // same staging discipline as the main build's cache mode: the frame
-    // feeds three jobs (heavy detection, maxId, the shuffle)
+    // the frame feeds three jobs (heavy detection, maxId, the shuffle):
+    // persisted in the block manager, spilling to disk at scale
     rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
       val heavy: Set[String] =
@@ -532,17 +440,14 @@ object Build {
       val maxId = if (agg.isNullAt(0)) 0L else agg.getLong(0)
       val total = agg.getLong(1)
       val nSalts = cfg.nSalts
-      // the analysis fragment (stem|plain|sw) doubles as the sidecar's
-      // merge-compatibility fingerprint (Merge reads it back from any
-      // marker): stopwords shift POSITIONS on the rule pipeline (dropped
-      // tokens don't emit), so two sidecars differing in any of the
-      // three cannot union into one phrase space — same failure mode the
-      // main index's corpus_stats.tok_cfg guards
-      val swDigest = java.security.MessageDigest.getInstance("MD5")
-        .digest(tokCfg.stopwords.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
+      // the analysis fingerprint (stem|plain|sw) doubles as the sidecar's
+      // merge-compatibility check (Merge reads it back from any marker):
+      // stopwords shift POSITIONS on the rule pipeline (dropped tokens
+      // don't emit), so two sidecars differing in any of the three
+      // cannot union into one phrase space — same failure mode the main
+      // index's CorpusStats.tokCfg guards
       val lineage = s"pos|rows=$total|salts=$nSalts|P=${cfg.numPartitions}|" +
-        s"stem=${tokCfg.stem}|plain=${tokCfg.plain}|sw=$swDigest|v2"
+        s"${CorpusStats.fingerprint(tokCfg)}|v2"
 
       val posDir = PosStore.posDir(indexDir)
       SegmentStore.fs(posDir).mkdirs(

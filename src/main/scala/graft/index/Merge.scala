@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   *   - segment files are linked/copied under prefixed names,
   *   - dict entries re-pointed at the prefixed files and unioned,
   *   - term_stats summed, doc_stats unioned, corpus stats re-derived.
+  * Every part must carry the current `format_version` (CorpusStats.read
+  * refuses anything else), so all parts share one schema.
   * The reference's analog is its external k-way merge re-reading and
   * re-writing every posting (indexer.py:376-554); here incremental
   * growth costs O(metadata), not O(index).
@@ -105,6 +107,8 @@ object Merge {
                spellIndex: Boolean = true): Unit = {
     import spark.implicits._
     require(parts.size >= 2, "need at least two indexes to merge")
+    // refuses any part not written under the current format_version
+    val partStats = parts.map(p => CorpusStats.read(spark, p))
 
     // ---- validate docId-range disjointness ---------------------------
     val ranges = parts.map { p =>
@@ -126,20 +130,13 @@ object Merge {
     // ---- validate analysis-chain compatibility: merging indexes built
     // with different tokenizer configs (stemmed vs unstemmed, different
     // stopword sets) would union incompatible term spaces — df/idf
-    // silently wrong and half the corpus unfindable. Build persists its
-    // analysis fingerprint in corpus_stats.tok_cfg; parts predating the
-    // column are tolerated (nothing to compare), any two DEFINED
-    // fingerprints must agree.
-    val tokCfgs = parts.flatMap { p =>
-      val cs = spark.read.parquet(s"$p/corpus_stats")
-      if (cs.columns.contains("tok_cfg"))
-        Option(cs.select($"tok_cfg").head().getString(0)).map(p -> _)
-      else None
-    }
-    require(tokCfgs.map(_._2).distinct.size <= 1,
+    // silently wrong and half the corpus unfindable. Every part's
+    // CorpusStats carries its analysis fingerprint; all must agree.
+    require(partStats.map(_.tokCfg).distinct.size == 1,
       "parts were built with different tokenizer configs — refusing to " +
         "merge incompatible term spaces: " +
-        tokCfgs.map { case (p, c) => s"$p -> $c" }.mkString("; "))
+        parts.zip(partStats).map { case (p, c) => s"$p -> ${c.tokCfg}" }
+          .mkString("; "))
 
     val fsOut = SegmentStore.fs(outDir)
     fsOut.mkdirs(new Path(s"$outDir/segments/_markers"))
@@ -166,19 +163,7 @@ object Merge {
       linkAndRepoint(spark, s"$p/segments", s"$p/dict",
         s"$outDir/segments", i, "dict")
     }
-    // allowMissingColumns everywhere below: a part built by an earlier
-    // engine generation may lack newer columns (ingest_ts in doc_stats,
-    // cf in dict/term_stats); absent values fill with the engine's
-    // neutral defaults instead of failing the upgrade merge
-    // ensureCol (not na.fill alone): when EVERY part predates a column,
-    // the union has no such column at all — na.fill on a missing column
-    // is a silent no-op and downstream reads/aggs would fail
-    def ensureCol(df: org.apache.spark.sql.DataFrame, c: String,
-                  dflt: org.apache.spark.sql.Column) =
-      if (df.columns.contains(c)) df.na.fill(0L, Seq(c))
-      else df.withColumn(c, dflt)
-    ensureCol(dicts.reduce(_.unionByName(_, allowMissingColumns = true)),
-        "cf", lit(0L))
+    dicts.reduce(_.unionByName(_))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict")
 
     // ---- positional sidecar (PosStore): carried iff EVERY part has it
@@ -197,24 +182,8 @@ object Merge {
       // term/POSITION spaces, so phrase queries would silently miss or
       // mis-place matches for one part's docs. The fingerprint rides
       // every pos marker's lineage (stem|plain|sw fragment).
-      val posCfgs = parts.map { p =>
-        val pd = PosStore.posDir(p)
-        val fsIn = SegmentStore.fs(pd)
-        val markers = fsIn.listStatus(new Path(s"$pd/_markers"))
-          .filter(_.getPath.getName.endsWith(".json"))
-        require(markers.nonEmpty, s"no pos markers under $pd — corrupt sidecar")
-        val in: java.io.InputStream = fsIn.open(markers.head.getPath)
-        val lineage =
-          try SegmentStore.mapper.readValue(in,
-            classOf[SegmentStore.PartitionMarker]).lineage
-          finally in.close()
-        val frag = "stem=[^|]*\\|plain=[^|]*(\\|sw=[^|]*)?".r
-          .findFirstIn(lineage)
-        require(frag.isDefined, s"$pd marker lineage carries no analysis " +
-          s"fingerprint: $lineage")
-        p -> frag.get
-      }
-      require(posCfgs.map(_._2).distinct.size <= 1,
+      val posCfgs = parts.map(p => p -> PosStore.fingerprint(p))
+      require(posCfgs.map(_._2).distinct.size == 1,
         "positional sidecars were built with different tokenizer " +
           "configs — refusing to merge incompatible phrase spaces: " +
           posCfgs.map { case (p, c) => s"$p -> $c" }.mkString("; "))
@@ -223,8 +192,12 @@ object Merge {
         linkAndRepoint(spark, PosStore.posDir(p), PosStore.dictDir(p),
           s"$outDir/pos", i, "pos_dict")
       }
-      posDicts.reduce(_.unionByName(_, allowMissingColumns = true))
+      posDicts.reduce(_.unionByName(_))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/pos_dict")
+      // the merged sidecar has no partition of its own: one entry-less
+      // marker persists the common fingerprint, so the merged index can
+      // itself be a part of a later (chained) merge
+      PosStore.writeFingerprint(outDir, posCfgs.head._2)
     } else if (partsWithPos.nonEmpty) {
       System.err.println(
         s"[merge] positional sidecar dropped: only ${partsWithPos.size}/" +
@@ -234,38 +207,17 @@ object Merge {
     }
 
     // ---- stats: union / sum ------------------------------------------
-    // ingest_ts = 0 for pre-recency docs == "oldest", exactly the
-    // engine's tsOf default for docs missing from the timestamp map
-    ensureCol(parts.map(p => spark.read.parquet(s"$p/doc_stats"))
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-        "ingest_ts", lit(0L))
+    parts.map(p => spark.read.parquet(s"$p/doc_stats")).reduce(_.unionByName(_))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/doc_stats")
 
-    ensureCol(parts.map(p => spark.read.parquet(s"$p/term_stats"))
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-        "cf", lit(0L))
+    parts.map(p => spark.read.parquet(s"$p/term_stats")).reduce(_.unionByName(_))
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"cf").as("cf"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/term_stats")
 
     val totals = ranges.map(_._3).sum
-    val partStats = parts.map { p =>
-      val cs = spark.read.parquet(s"$p/corpus_stats")
-      val a = cs.select($"avgdl").head().getDouble(0)
-      // a part that is itself a merge result carries its own scale —
-      // its stored bounds are only valid multiplied by it
-      val s = if (cs.columns.contains("bound_scale"))
-        cs.select($"bound_scale").head().getDouble(0) else 1.0
-      val (tMin, tMax) = if (cs.columns.contains("ts_min")) {
-        val r = cs.select($"ts_min", $"ts_max").head()
-        (r.getLong(0), r.getLong(1))
-      } else (0L, 0L)
-      (a, s, tMin, tMax)
-    }
-    val avgdl = partStats.map(_._1).zip(ranges)
+    val avgdl = partStats.map(_.avgdl).zip(ranges)
       .map { case (a, (_, _, n)) => a * n }.sum / totals
-    val tsMin = partStats.map(_._3).min
-    val tsMax = partStats.map(_._4).max
     // Block-max bounds were encoded against each PART's avgdl; U(tf,dl)
     // grows with avgdl, and sup over (tf,dl) of U(a_new)/U(a_old) is
     // a_new/a_old. Each part's guarantee is partScale * storedBound >=
@@ -274,44 +226,34 @@ object Merge {
     // part stays a true upper bound (rank identity, SURVEY hard-part 3)
     // at the cost of slightly looser pruning.
     val boundScale = partStats
-      .map { case (a, s, _, _) => s * math.max(1.0, avgdl / a) }.max
-    val mergedCs = Seq((totals, avgdl, boundScale, tsMin, tsMax))
-      .toDF("n_docs", "avgdl", "bound_scale", "ts_min", "ts_max")
-    // carry the (validated-common) analysis fingerprint forward so
+      .map(c => c.boundScale * math.max(1.0, avgdl / c.avgdl)).max
+    // the fingerprint was validated common above and rides forward so
     // chained re-merges keep enforcing compatibility
-    tokCfgs.headOption.map(_._2)
-      .fold(mergedCs)(c => mergedCs.withColumn("tok_cfg", lit(c)))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/corpus_stats")
+    CorpusStats(totals, avgdl, boundScale, partStats.map(_.tsMin).min,
+      partStats.map(_.tsMax).max, partStats.map(_.nNumberTokens).sum,
+      partStats.head.tokCfg).write(spark, outDir)
 
     // ---- ts artifact: doc ranges are disjoint, so part stores LINK
     // under flat names (t<part>-<idx>.bin — a chained re-merge
     // re-flattens instead of compounding prefixes) and their manifests
-    // concatenate. Only a legacy part that carries recency but predates
-    // the artifact forces a regenerate from the merged doc_stats. ------
-    val anyTs = partStats.exists(s => s._3 != 0L || s._4 != 0L)
-    if (anyTs) {
-      val linkable = parts.zip(partStats).forall {
-        case (p, (_, _, tMin, tMax)) =>
-          (tMin == 0L && tMax == 0L) || TsStore.exists(s"$p/ts")
-      }
-      if (linkable) {
-        fsOut.mkdirs(new Path(s"$outDir/ts"))
-        val metas = parts.zipWithIndex.flatMap { case (p, i) =>
-          val fsIn = SegmentStore.fs(s"$p/ts")
-          TsStore.readManifest(s"$p/ts").getOrElse(Seq.empty)
-            .zipWithIndex.map { case (tf, j) =>
-              val nn = s"t$i-$j.bin"
-              linkOrCopy(fsIn, new Path(s"$p/ts/${tf.name}"),
-                fsOut, new Path(s"$outDir/ts/$nn"))
-              tf.copy(name = nn)
-            }
+    // concatenate. A part that carries recency always has a store; one
+    // without it is corrupt and refused. ---------------------------------
+    if (partStats.exists(_.hasRecency)) {
+      fsOut.mkdirs(new Path(s"$outDir/ts"))
+      val metas = parts.zip(partStats).zipWithIndex.flatMap { case ((p, c), i) =>
+        val fsIn = SegmentStore.fs(s"$p/ts")
+        val files = TsStore.readManifest(s"$p/ts")
+        require(files.isDefined || !c.hasRecency,
+          s"$p carries recency (ts ${c.tsMin}..${c.tsMax}) but has no " +
+            "readable ts store — corrupt index, not mergeable")
+        files.getOrElse(Seq.empty).zipWithIndex.map { case (tf, j) =>
+          val nn = s"t$i-$j.bin"
+          linkOrCopy(fsIn, new Path(s"$p/ts/${tf.name}"),
+            fsOut, new Path(s"$outDir/ts/$nn"))
+          tf.copy(name = nn)
         }
-        TsStore.writeManifest(s"$outDir/ts", metas)
-      } else {
-        TsStore.write(spark, spark.read.parquet(s"$outDir/doc_stats"),
-          s"$outDir/ts",
-          math.max(1, math.min(1024, (totals / 2000000L).toInt + 1)))
       }
+      TsStore.writeManifest(s"$outDir/ts", metas)
     }
 
     // ---- spell artifact: the delete-variant index keys on the UNION
@@ -352,10 +294,10 @@ object Merge {
     * pass each (distributed one task per segment file, no shuffle), byte
     * length is provably unchanged, and the dict's (file, offset, length)
     * pointers carry over verbatim. All other metadata links/copies;
-    * corpus_stats is rewritten with bound_scale=1. */
+    * the corpus stats are rewritten with boundScale = 1. */
   def compact(spark: SparkSession, indexDir: String, outDir: String): Unit = {
-    val cs = spark.read.parquet(s"$indexDir/corpus_stats").head()
-    val avgdl = cs.getAs[Double]("avgdl")
+    val cs = CorpusStats.read(spark, indexDir)
+    val avgdl = cs.avgdl
 
     val fsIn = SegmentStore.fs(indexDir)
     val fsOut = SegmentStore.fs(outDir)
@@ -379,11 +321,7 @@ object Merge {
       spark.read.parquet(s"$indexDir/$sub")
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$sub")
     }
-    // preserve whatever columns this generation carries (e.g. a plain
-    // build's n_number_tokens); only the scale is rewritten
-    spark.read.parquet(s"$indexDir/corpus_stats")
-      .withColumn("bound_scale", lit(1.0))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/corpus_stats")
+    cs.copy(boundScale = 1.0).write(spark, outDir)
 
     // ts + spell artifacts: content-identical, link under the SAME names
     TsStore.readManifest(s"$indexDir/ts").foreach { metas =>

@@ -48,6 +48,32 @@ object PosStore {
     f.exists(new Path(dictDir(indexDir))) && f.exists(new Path(posDir(indexDir)))
   }
 
+  /** The analysis fingerprint (CorpusStats.fingerprint form) the sidecar
+    * was built under, read from any one marker's lineage: Merge refuses
+    * to union sidecars whose fingerprints differ. */
+  def fingerprint(indexDir: String): String = {
+    val pd = posDir(indexDir)
+    val f = SegmentStore.fs(pd)
+    val markers = f.listStatus(new Path(s"$pd/_markers"))
+      .filter(_.getPath.getName.endsWith(".json"))
+    require(markers.nonEmpty, s"no pos markers under $pd — corrupt sidecar")
+    val in: java.io.InputStream = f.open(markers.head.getPath)
+    val lineage =
+      try SegmentStore.mapper.readValue(in,
+        classOf[SegmentStore.PartitionMarker]).lineage
+      finally in.close()
+    val fp = "stem=[^|]*\\|plain=[^|]*\\|sw=[^|]*".r.findFirstIn(lineage)
+    require(fp.isDefined,
+      s"$pd marker lineage carries no analysis fingerprint: $lineage")
+    fp.get
+  }
+
+  /** Persist `fp` where [[fingerprint]] reads it, as the one entry-less
+    * marker of a merged sidecar (which has no partition of its own). */
+  def writeFingerprint(indexDir: String, fp: String): Unit =
+    SegmentStore.writeMarker(posDir(indexDir), SegmentStore.PartitionMarker(
+      0, Seq.empty, 0L, 0L, s"pos|merged|$fp", Seq.empty))
+
   // ---- codec ---------------------------------------------------------
 
   /** Map-side shuffle payload: one doc's ascending positions varbyte-

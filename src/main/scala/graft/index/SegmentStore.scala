@@ -112,23 +112,6 @@ object SegmentStore {
     writeCore(dir, pid, lineage, groupRows(it), scoreOf, postingBudget)
   }
 
-  /** The runs-shuffle variant ([[PostingRunAgg]]): `it` yields whole
-    * (term, salt, docId-sorted postings) groups, sorted by (term, salt)
-    * — the aggregation already collected each run. Same encode / roll /
-    * marker core as [[writePartition]], so the two shuffle modes emit
-    * byte-identical segment files (IndexSpec pins it). */
-  def writePartitionRuns(dir: String, pid: Int, lineage: String,
-                         it: Iterator[(String, Int, Array[Codec.Posting])],
-                         scoreOf: (Int, Int) => Double,
-                         postingBudget: Long = SegmentPostingBudget): PartitionMarker = {
-    readMarker(dir, pid) match {
-      case Some(m) if isComplete(dir, pid, lineage) =>
-        return m
-      case _ =>
-    }
-    writeCore(dir, pid, lineage, it, scoreOf, postingBudget)
-  }
-
   /** Change-detection grouping of a (term, salt, posting)-sorted row
     * stream into whole groups — one group's postings buffered at a
     * time, like the original streaming writer. */

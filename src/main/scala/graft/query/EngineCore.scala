@@ -49,19 +49,6 @@ trait TsSource extends Serializable {
   def open(): TsLookup
 }
 
-/** Array-backed source: test/bench-scale preloads and legacy indexes
-  * without a ts artifact (the doc-count materialization the reference
-  * does at startup, search_engine.py:65-69 — Engine's documented
-  * fallback, never the scale path). */
-final class ArrayTsSource(ids: Array[Long], vals: Array[Long]) extends TsSource {
-  def open(): TsLookup = new TsLookup {
-    def tsOf(id: Long): Long = {
-      val i = java.util.Arrays.binarySearch(ids, id)
-      if (i >= 0) vals(i) else 0L
-    }
-  }
-}
-
 /** File-backed source over the index's ts artifact
   * (graft.index.TsStore): O(log n) positioned page reads on exact ties,
   * nothing doc-count-sized in memory or in the broadcast. A per-JVM
@@ -119,7 +106,7 @@ object EngineCore {
 
 final class EngineCore(
     val nDocs: Long, val avgdl: Double, val boundScale: Double,
-    val tieAware: Boolean, tsSource: TsSource,
+    tsSource: Option[TsSource],
     resolver: TermResolver, segmentsDir: String,
     tokCfg: Tokenizer.Config, pruneSingletons: Boolean, spell: Boolean,
     spellDir: String = "")
@@ -176,11 +163,14 @@ final class EngineCore(
     if (l != null) { try l.close() catch { case _: Exception => () } }
   }
 
+  // `tsSource` is defined iff exact score ties can differ by recency;
+  // a plain flag keeps the WAND hot loop off the Option
+  private val tieAware = tsSource.isDefined
   // materialized-or-not tracked separately so close() only touches a
   // lookup that actually opened (a lazy val can't be probed)
   @transient @volatile private var tsOpened: TsLookup = null
   @transient private lazy val tsLookup: TsLookup = {
-    val l = tsSource.open()
+    val l = tsSource.get.open()
     tsOpened = l
     l
   }
@@ -203,9 +193,10 @@ final class EngineCore(
     *  1. the persisted BUILD artifact (`$indexDir/spell`, written once at
     *     index-build time): one sequential read, so a cold executor's
     *     first-miss correction latency ≈ warm latency;
-    *  2. lazily built from the resolver's stats (pre-artifact indexes;
-    *     generating the full edit-2 string neighborhood per miss measured
-    *     50-190 ms on a 150k vocab — the index answers in ~1 ms);
+    *  2. lazily built from the resolver's stats (a build or merge that
+    *     skipped the best-effort artifact; generating the full edit-2
+    *     string neighborhood per miss measured 50-190 ms on a 150k
+    *     vocab — the index answers in ~1 ms);
     *  3. a resolver that refuses the stats load (extreme vocab) degrades
     *     to the bounded generate-and-probe fallback.
     * Corrections are memoized per JVM — pure given the frozen dict. */

@@ -163,14 +163,9 @@ final class PhraseCore(posDir: String,
                        entries: Map[String, Array[SegmentStore.DictEntry]])
     extends Serializable {
 
-  @transient private var readerTL: ThreadLocal[PosReader] = _
-  private def reader: PosReader = {
-    if (readerTL == null) synchronized {
-      if (readerTL == null)
-        readerTL = ThreadLocal.withInitial(() => new PosReader(posDir))
-    }
-    readerTL.get()
-  }
+  @transient private lazy val readerTL: ThreadLocal[PosReader] =
+    ThreadLocal.withInitial(() => new PosReader(posDir))
+  private def reader: PosReader = readerTL.get()
 
   def search(phrase: String): Array[(Long, Long, Long)] = {
     val terms = Tokenizer.tokenizeSeq(phrase, tokCfg)
@@ -179,8 +174,7 @@ final class PhraseCore(posDir: String,
       t => entries.getOrElse(t, Array.empty).flatMap(e => r.record(e)._2))
   }
 
-  def closeThreadReader(): Unit =
-    if (readerTL != null) { reader.close(); readerTL.remove() }
+  def closeThreadReader(): Unit = { reader.close(); readerTL.remove() }
 }
 
 object PhraseCore {

@@ -79,27 +79,4 @@ class CodecSpec extends AnyFunSuite {
     val bad = Array(Codec.Posting(5, 1, 10), Codec.Posting(5, 2, 10))
     assertThrows[IllegalArgumentException](Codec.encode(bad, score))
   }
-
-  test("RunBuf: add/append/serialize round-trips to docId-sorted postings (randomized)") {
-    val r = new scala.util.Random(23)
-    for (n <- Seq(0, 1, 2, 7, 128, 5000)) {
-      // distinct random docIds in arbitrary order (the agg's input order)
-      val ids = r.shuffle((0 until n).map(i => i.toLong * 17 + r.nextInt(16)))
-        .distinct.toArray
-      val ps = ids.map(id =>
-        Codec.Posting(id, 1 + r.nextInt(1000), 1 + r.nextInt(100000)))
-      // split across two buffers and append — the merge() path
-      val (a, b) = ps.splitAt(ps.length / 3)
-      val bufA = RunBuf.empty()
-      a.foreach(p => bufA.add(p.docId, p.tf, p.dl))
-      val bufB = RunBuf.empty()
-      b.foreach(p => bufB.add(p.docId, p.tf, p.dl))
-      bufA.append(bufB)
-      val out = RunBuf.postings(bufA.serialize())
-      assert(out.toSeq == ps.sortBy(_.docId).toSeq, s"n=$n")
-      // serialize→deserialize→serialize is stable (shuffle-write path)
-      val re = RunBuf.deserialize(bufA.serialize()).serialize()
-      assert(java.util.Arrays.equals(re, bufA.serialize()), s"n=$n restable")
-    }
-  }
 }

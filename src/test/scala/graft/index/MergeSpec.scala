@@ -36,6 +36,12 @@ class MergeSpec extends SparkSpec {
     assert(engM.nDocs == engF.nDocs)
     assert(math.abs(engM.avgdl - engF.avgdl) < 1e-9)
     assert(engM.boundScale > 1.0, "fixture should exercise bound inflation")
+    // the A9 numbers counter survives the merge: the sum over parts,
+    // equal to the full rebuild's count
+    val nNum = Seq(idxA, idxB, merged, idxFull)
+      .map(d => CorpusStats.read(spark, d).nNumberTokens)
+    assert(nNum(2) == nNum(0) + nNum(1), s"merged counter: $nNum")
+    assert(nNum(2) == nNum(3) && nNum(3) > 0, s"merged vs rebuild: $nNum")
 
     val queries = Seq("the", "if return", "license apache the", "import",
       "the if return import license apache")
@@ -82,9 +88,9 @@ class MergeSpec extends SparkSpec {
     val m2 = tmpDir("remerge-abc")
     Merge.disjoint(spark, Seq(m1, idxC), m2)
 
-    val cs = spark.read.parquet(s"$m2/corpus_stats").head()
-    val avgdl = cs.getAs[Double]("avgdl")
-    val scale = cs.getAs[Double]("bound_scale")
+    val cs = CorpusStats.read(spark, m2)
+    val avgdl = cs.avgdl
+    val scale = cs.boundScale
     assert(math.abs(avgdl - 3.5) < 1e-9, s"fixture avgdl drifted: $avgdl")
     // composed: AB carries scale 2, times max(1, 3.5/4) -> 2.0
     assert(math.abs(scale - 2.0) < 1e-9, s"composed scale wrong: $scale")
@@ -161,23 +167,21 @@ class MergeSpec extends SparkSpec {
       Merge.disjoint(spark, Seq(a, b), o))
   }
 
-  test("merging a pre-recency-generation part (no ingest_ts / cf) upgrades instead of failing") {
+  test("merging a pre-stamp part (no format_version / ingest_ts / cf) is refused") {
     import spark.implicits._
-    val docsA = (0L until 80L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content")
-    val docsB = (200L until 280L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content")
     def build(df: org.apache.spark.sql.DataFrame, name: String): String = {
       val d = tmpDir(name)
       Build.run(spark, df, d, Build.Config(numPartitions = 4, nSalts = 2,
         saltDfThreshold = 60, verifySha = false))
       d
     }
-    val idxOldGen = build(docsA, "upgrade-a")
-    val idxNew = build(docsB, "upgrade-b")
+    val idxOldGen = build((0L until 80L).map(i =>
+      (i, Synth.content(i))).toDF("doc_id", "content"), "upgrade-a")
+    val idxNew = build((200L until 280L).map(i =>
+      (i, Synth.content(i))).toDF("doc_id", "content"), "upgrade-b")
     // strip idxOldGen down to the earlier generation's schema:
     // doc_stats without ingest_ts, dict/term_stats without cf,
-    // corpus_stats without ts_min/ts_max
+    // corpus_stats without ts_min/ts_max and the format stamp
     def rewrite(sub: String, drop: Seq[String]): Unit = {
       val df = spark.read.parquet(s"$idxOldGen/$sub")
         .drop(drop: _*).cache()
@@ -188,46 +192,20 @@ class MergeSpec extends SparkSpec {
     rewrite("doc_stats", Seq("ingest_ts"))
     rewrite("dict", Seq("cf"))
     rewrite("term_stats", Seq("cf"))
-    rewrite("corpus_stats", Seq("ts_min", "ts_max"))
+    rewrite("corpus_stats", Seq("ts_min", "ts_max", "format_version"))
 
-    val merged = tmpDir("upgrade-out")
-    Merge.disjoint(spark, Seq(idxOldGen, idxNew), merged)
-    val eng = new Engine(spark, merged, preload = true)
-    assert(eng.nDocs == 160)
-    for (q <- Seq("codec", "server build", "buffer stream schema")) {
-      val w = eng.searchWand(q, 50)
-      assert(w.nonEmpty)
-      // rank identity holds with old-gen docs defaulting to ts=0
-      assert(w.toSeq == eng.searchExhaustive(q, 50).toSeq, s"q=$q")
-    }
-    eng.close()
-
-    // ALL-old-generation merge: the union then has NO newer column at
-    // all, which a bare na.fill would silently skip (review finding) —
-    // the columns must be created with defaults
-    val idxOld2 = build((400L until 460L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content"), "upgrade-c")
-    def strip(idx: String): Unit = {
-      def rw(sub: String, drop: Seq[String]): Unit = {
-        val df = spark.read.parquet(s"$idx/$sub").drop(drop: _*).cache()
-        df.count()
-        df.write.mode("overwrite").parquet(s"$idx/$sub")
-        df.unpersist()
+    // refused in either part order, naming the part, before the merge
+    // writes anything
+    for (parts <- Seq(Seq(idxOldGen, idxNew), Seq(idxNew, idxOldGen))) {
+      val merged = tmpDir("upgrade-out")
+      val e = intercept[IllegalArgumentException] {
+        Merge.disjoint(spark, parts, merged)
       }
-      rw("doc_stats", Seq("ingest_ts"))
-      rw("dict", Seq("cf"))
-      rw("term_stats", Seq("cf"))
-      rw("corpus_stats", Seq("ts_min", "ts_max"))
+      assert(e.getMessage.contains(idxOldGen) &&
+        e.getMessage.contains("format_version"), e.getMessage)
+      assert(new java.io.File(merged).list().isEmpty,
+        s"refused merge wrote ${new java.io.File(merged).list().mkString(",")}")
     }
-    strip(idxOld2)
-    val merged2 = tmpDir("upgrade-out-oldold")
-    Merge.disjoint(spark, Seq(idxOldGen, idxOld2), merged2)
-    val eng2 = new Engine(spark, merged2, preload = true)
-    assert(eng2.nDocs == 140)
-    val w2 = eng2.searchWand("codec", 30)
-    assert(w2.nonEmpty)
-    assert(w2.toSeq == eng2.searchExhaustive("codec", 30).toSeq)
-    eng2.close()
   }
 
   test("replayed merge into the same outDir never truncates the live index through a hard link") {

@@ -235,6 +235,27 @@ class PosStoreSpec extends SparkSpec {
       }
     } finally { m.close(); full.close() }
 
+    // chained: the merged index is itself a part of the next merge — its
+    // sidecar must still carry the analysis fingerprint the guard reads
+    val maxId = docs.agg(max($"doc_id")).head.getLong(0)
+    val de = Seq((maxId + 1, "a table scan over the big order batch batch"),
+      (maxId + 2, "the big table scan")).toDF("doc_id", "content")
+    val pe = tmpDir("pos-merge-e")
+    Build.run(spark, de, pe, cfg); Build.buildPosStore(spark, de, pe, cfg)
+    val chained = tmpDir("pos-chained")
+    Merge.disjoint(spark, Seq(merged, pe), chained, spellIndex = false)
+    assert(PosStore.exists(chained), "chained merge must keep positions")
+    val (m1, e1, c1) = (new PhraseSearcher(spark, merged, Tokenizer.plainCfg),
+      new PhraseSearcher(spark, pe, Tokenizer.plainCfg),
+      new PhraseSearcher(spark, chained, Tokenizer.plainCfg))
+    try {
+      Seq("table scan", "the big", "order batch batch").foreach { ph =>
+        assert(e1.search(ph).nonEmpty, s"fixture: '$ph' in the new part")
+        assert(c1.search(ph).toSet == (m1.search(ph) ++ e1.search(ph)).toSet,
+          s"chained phrase '$ph'")
+      }
+    } finally { m1.close(); e1.close(); c1.close() }
+
     // mixed: a part without positions => merged index omits the sidecar
     val pc = tmpDir("pos-merge-c")
     Build.run(spark, db, pc, cfg) // no buildPosStore

@@ -88,6 +88,26 @@ class ClassifierSpec extends SparkSpec {
       s"featurization must be map-only (no shuffle):\n$plan")
   }
 
+  test("q58 featurize lowercases locale-independently (I under tr-TR)") {
+    import spark.implicits._
+    val dir = tmpDir("clf-locale")
+    val text = "IMPORT INDEX IF In Is LIST Item"
+    Seq((0L, text, "en", "src0", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def feats(): Seq[(Long, Seq[Int], Seq[Double])] =
+      Classifier.featurize(spark, dir).collect()
+        .map(ex => (ex.docId, ex.idx.toSeq, ex.v.toSeq)).toSeq
+    val root = feats()
+    val saved = java.util.Locale.getDefault
+    try {
+      // Turkish lowercases I to dotless ı: a default-locale lowercase
+      // would hash these tokens into other buckets
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert(feats() == root)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("q58 on the driver corpus: runs end-to-end and reports a real accuracy") {
     import spark.implicits._
     val out = Classifier.qualityClassifier(spark, "/root/testdata/sf0.001")

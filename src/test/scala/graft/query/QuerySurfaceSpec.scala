@@ -145,10 +145,8 @@ class QuerySurfaceSpec extends SparkSpec {
       def dictEntries(terms: Seq[String]) = full.dictEntries(terms)
       def allStats: Option[Map[String, Long]] = None
     }
-    val cs = spark.read.parquet(s"$idx/corpus_stats")
-      .select($"n_docs", $"avgdl").head()
-    val core = new EngineCore(cs.getLong(0), cs.getDouble(1), 1.0,
-      tieAware = false, new ArrayTsSource(Array.empty, Array.empty),
+    val cs = graft.index.CorpusStats.read(spark, idx)
+    val core = new EngineCore(cs.nDocs, cs.avgdl, 1.0, tsSource = None,
       noStats, s"$idx/segments", Tokenizer.plainCfg,
       pruneSingletons = false, spell = true, spellDir = s"$idx/spell")
     core.warmSpell() // the eager knob: cost lands here, not in a query
